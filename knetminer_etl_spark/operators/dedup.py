@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import normalize_text, shingles_from_tokens, tokens, word_shingles
+from .text import normalize_text, shingles_from_tokens, tokens
 from .util import fan_out
 
 
@@ -171,6 +171,128 @@ def candidate_pairs_from_buckets(
         .select(F.col("_p.a").alias("id_a"), F.col("_p.b").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
+
+
+# ---------------------------------------------------------------------------
+# Persisted band indexes: the scheme stamp and the one incremental engine
+# behind incremental_{minhash,hamming,semantic}_pairs,
+# multimodal.incremental_video_pairs and every streaming dedup epoch
+# ---------------------------------------------------------------------------
+
+#: version of the MinHash lane function, part of the MinHash index
+#: scheme. 2 = ``xxhash64(xxhash64(shingle), i)`` (each shingle string
+#: hashed once, its 64-bit value remixed per lane); 1 was
+#: ``xxhash64(shingle, i)``.
+MINHASH_LANE_SCHEME = 2
+
+
+def _with_scheme(
+    rows: DataFrame, builder: str, family: str, *params
+) -> DataFrame:
+    """``rows`` plus the ``scheme`` long column of a persisted band
+    index: a blake2b digest of the banding family and parameters
+    (stable across processes, unlike ``hash()``), so indexes built with
+    different parameters differ barring a 2⁻⁶⁴ collision. The metadata
+    carries the same id and the builder's name, so
+    :func:`_incremental_band_pairs` reads a pinned batch's scheme on the
+    driver without a job."""
+    import hashlib
+
+    digest = hashlib.blake2b(
+        repr((family, *params)).encode(), digest_size=8
+    ).digest()
+    sid = int.from_bytes(digest, "big", signed=True)
+    return rows.select(
+        "*",
+        F.lit(sid)
+        .cast("long")
+        .alias("scheme", metadata={"scheme": sid, "builder": builder}),
+    )
+
+
+def _incremental_band_pairs(
+    new_bands: DataFrame,
+    old_index: DataFrame | None,
+    keys: list[str],
+    id_col: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate rows ``(id_a, id_b, <c>_a, <c>_b, …)``, id_a < id_b,
+    for a PINNED batch of band rows (a public ``*_band_rows`` builder's
+    output) against the saved index of earlier batches:
+
+    * new-new — a self-equi-join of the batch rows on ``keys``. The pin
+      makes the second join side free, which removes the reason
+      :func:`candidate_pairs_from_buckets` avoids a self-join;
+    * new-old — ``old_index`` minus the batch's ids (re-ingestion: the
+      new rows win), equi-joined on ``keys``. Old-vs-old is never
+      re-paired.
+
+    Each ``carry`` column (fingerprint, frame timestamp) follows its id
+    when a pair is put in id order. Rows are not deduplicated: a pair
+    sharing several buckets repeats, and each verifier decides.
+    ``old_index=None`` means no earlier batch.
+
+    The index must carry the batch's ``scheme``. One without the column
+    (built before indexes were stamped) is refused on the driver; one
+    with another value raises from a ``raise_error`` filter on the old
+    side, inside the join's own job — a foreign index never silently
+    loses recall."""
+    cols = ["id", *carry]
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    pairs = (
+        side(new_bands, "a")
+        .join(side(new_bands, "b"), on=keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(*[f"{c}_a" for c in cols], *[f"{c}_b" for c in cols])
+    )
+    if old_index is None:
+        return pairs
+    meta = new_bands.schema["scheme"].metadata
+    rebuild = f"rebuild it with {meta['builder']} at the batch's parameters"
+    if "scheme" not in old_index.columns:
+        raise ValueError(
+            "band index has no 'scheme' column (built before indexes "
+            f"recorded their banding scheme): {rebuild}"
+        )
+    foreign = F.raise_error(
+        F.lit(
+            "band index was built with another banding scheme than "
+            f"{meta['scheme']}: {rebuild}"
+        )
+    )
+    old = old_index.filter(
+        F.when(F.col("scheme") != F.lit(meta["scheme"]), foreign).otherwise(
+            F.lit(True)
+        )
+    ).join(new_bands.select(id_col).distinct(), on=id_col, how="left_anti")
+    new_first = F.col("id_n") < F.col("id_o")
+    new_old = (
+        side(new_bands, "n")
+        .join(side(old, "o"), on=keys)
+        .select(
+            *[
+                F.when(new_first, F.col(f"{c}_n"))
+                .otherwise(F.col(f"{c}_o"))
+                .alias(f"{c}_a")
+                for c in cols
+            ],
+            *[
+                F.when(new_first, F.col(f"{c}_o"))
+                .otherwise(F.col(f"{c}_n"))
+                .alias(f"{c}_b")
+                for c in cols
+            ],
+        )
+    )
+    return pairs.unionByName(new_old)
 
 
 # ---------------------------------------------------------------------------
@@ -940,23 +1062,35 @@ def minhash_band_rows(
     bands: int = 32,
     k: int = 3,
 ) -> DataFrame:
-    """(doc_id, band, bucket): the banded-LSH blocking relation — and
-    the PERSISTENT INDEX format for incremental dedup. Save it
+    """(doc_id, band, bucket, scheme): the banded-LSH blocking relation
+    — and the PERSISTENT INDEX format for incremental dedup. Save it
     (parquet, partitioned however reads like) when a corpus batch is
     ingested; later batches join their own band rows against it
     (:func:`incremental_minhash_pairs`) instead of re-hashing the whole
     corpus. Narrow map over the signatures; bands × rows per doc.
 
-    INDEX CONTRACT: the shape is part of the persisted format — every
-    later batch must band with the SAME (num_perm, bands), and the
-    incremental recall equals THIS shape's recall, not the auto shape
-    the full-rebuild path would pick for the grown corpus. Size the
-    index shape once, for the dedup policy's threshold, e.g. from
-    :func:`_auto_minhash_shape` at the corpus's expected magnitude (the
-    static default here is the r=2 floor shape: miss ≤ 1e-4 at j = 0.5,
-    ≤ 6e-7 at j ≥ 0.6)."""
-    return _band_rows_from_hashes(
-        _hashed_shingles(df, id_col, text_col, k), num_perm, bands
+    INDEX CONTRACT: the shape is part of the persisted format. The
+    ``scheme`` column stamps every row with an id of the lane-scheme
+    version (:data:`MINHASH_LANE_SCHEME`), ``num_perm``, ``bands`` and
+    ``k``; a later batch banded any other way fails loudly against the
+    index instead of silently missing its new-vs-old pairs, and an
+    index without the column (built before the stamp) is refused — in
+    both cases rebuild it with this function. Incremental recall equals
+    THIS shape's recall, not the auto shape the full-rebuild path would
+    pick for the grown corpus. Size the index shape once, for the dedup
+    policy's threshold, e.g. from :func:`_auto_minhash_shape` at the
+    corpus's expected magnitude (the static default here is the r=2
+    floor shape: miss ≤ 1e-4 at j = 0.5, ≤ 6e-7 at j ≥ 0.6)."""
+    return _with_scheme(
+        _band_rows_from_hashes(
+            _hashed_shingles(df, id_col, text_col, k), num_perm, bands
+        ),
+        "minhash_band_rows",
+        "minhash",
+        MINHASH_LANE_SCHEME,
+        num_perm,
+        bands,
+        k,
     )
 
 
@@ -1319,13 +1453,10 @@ def _minhash_lsh_pairs_direct(
     shared = (
         verify and n_docs is not None and n_docs <= VERIFY_FULL_SHINGLE_MAX
     )
+    hh = _hashed_shingles(df, id_col, text_col, k)
     if shared:
-        hh = _hashed_shingles(df, id_col, text_col, k).localCheckpoint(
-            eager=True
-        )
-        banded = _band_rows_from_hashes(hh, num_perm, bands)
-    else:
-        banded = minhash_band_rows(df, id_col, text_col, num_perm, bands, k)
+        hh = hh.localCheckpoint(eager=True)
+    banded = _band_rows_from_hashes(hh, num_perm, bands)
 
     # the banding relation's cardinality is KNOWN when n_docs is
     # (n_docs × bands rows of ~28 B: id, band, bucket) — size the
@@ -1481,7 +1612,7 @@ def verified_jaccard_pairs(
 
 def incremental_minhash_pairs(
     new_docs: DataFrame,
-    old_index: DataFrame,
+    old_index: DataFrame | None,
     corpus: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -1503,38 +1634,40 @@ def incremental_minhash_pairs(
     ``corpus`` supplies texts for verification (new + any old doc that
     became a candidate — semi-joined down before shingling).
     ``old_index`` rows for ids also present in ``new_docs`` are ignored
-    (re-ingestion safe). At 100 TB the per-refresh cost is
-    O(batch + matched buckets), not O(corpus).
-
-    INDEX FORMAT BREAK (round 10): the lane scheme changed from
-    ``xxhash64(shingle, i)`` to ``xxhash64(xxhash64(shingle), i)``
-    (hash each shingle string once, remix the 64-bit value per lane —
-    same banding statistics, ~num_perm× less variable-length hashing).
-    Signatures and band buckets therefore differ from indexes persisted
-    by earlier builds: joining an OLD index against NEW batches silently
-    stops matching (missed new-vs-old pairs) — there is no version
-    marker in the band-row format. Rebuild persisted indexes with
-    :func:`minhash_band_rows` at the current scheme before resuming
-    incremental ingestion."""
+    (re-ingestion safe); ``None`` means no earlier batch. An index built
+    with another shape or lane scheme raises (see
+    :func:`minhash_band_rows`). At 100 TB the per-refresh cost is
+    O(batch + matched buckets), not O(corpus)."""
     new_bands = minhash_band_rows(
         new_docs, id_col, text_col, num_perm, bands, k
-    ).localCheckpoint(eager=True)  # reused by both candidate branches
-    new_new = candidate_pairs_from_buckets(new_bands, ["band", "bucket"])
-    new_ids = new_bands.select("doc_id").distinct()
-    old = (
-        old_index.join(new_ids, on="doc_id", how="left_anti")
-        .select(F.col("doc_id").alias("_old_id"), "band", "bucket")
+    ).localCheckpoint(eager=True)
+    return _minhash_pairs_from_bands(
+        new_bands, old_index, corpus, id_col, text_col, k, threshold
     )
-    new_old = (
-        new_bands.join(old, on=["band", "bucket"])
-        .select(
-            F.least(F.col("doc_id"), F.col("_old_id")).alias("id_a"),
-            F.greatest(F.col("doc_id"), F.col("_old_id")).alias("id_b"),
+
+
+def _minhash_pairs_from_bands(
+    new_bands: DataFrame,
+    old_index: DataFrame | None,
+    corpus: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """:func:`incremental_minhash_pairs` after banding: the shared core
+    over pinned :func:`minhash_band_rows`, verified with true Jaccard
+    (the streaming epoch bands once and calls this directly)."""
+    cands = (
+        _incremental_band_pairs(
+            new_bands, old_index, ["band", "bucket"], "doc_id"
         )
+        .select("id_a", "id_b")
         .distinct()
     )
-    cands = new_new.unionByName(new_old).distinct()
-    return verified_jaccard_pairs(cands, corpus, id_col, text_col, k, threshold)
+    return verified_jaccard_pairs(
+        cands, corpus, id_col, text_col, k, threshold
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1545,30 +1678,6 @@ def incremental_minhash_pairs(
 def _bit_mask(i: int) -> int:
     """Signed-long literal with only bit i set (bit 63 = sign bit)."""
     return (1 << i) if i < 63 else -(1 << 63)
-
-
-def _bit_vote(hashes: Column, i: int) -> Column:
-    """Sum over hashes of (bit i set ? +1 : -1) — a scalar fold with no
-    per-element array allocation (the earlier array-of-64-votes zip_with
-    fold allocated 64-int arrays per shingle and went 5x slower under GC
-    pressure)."""
-    mask = F.lit(_bit_mask(i)).cast("long")
-    return F.aggregate(
-        hashes,
-        F.lit(0),
-        lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1),
-    )
-
-
-def _votes_to_fp(votes: list[Column]) -> Column:
-    fp = F.lit(0).cast("long")
-    for i, v in enumerate(votes):
-        fp = fp.bitwiseOR(
-            F.when(v > 0, F.lit(_bit_mask(i)).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return fp
 
 
 def md5_hash60(col: Column) -> Column:
@@ -1620,14 +1729,6 @@ def with_simhash64(
     return voted.select(
         F.col("_id").alias("doc_id"), F.expr(fp).alias(out_col)
     )
-
-
-def simhash64(col: Column, k: int = 1) -> Column:
-    """64-bit SimHash of word k-shingles as a single Column expression.
-    Prefer :func:`with_simhash64` in plans — the staged variant compiles
-    far faster; this inline form suits small expressions/tests."""
-    hashes = F.transform(word_shingles(col, k), lambda s: F.xxhash64(s))
-    return _votes_to_fp([_bit_vote(hashes, i) for i in range(64)])
 
 
 def simhash_pairs(
@@ -1728,14 +1829,15 @@ def hamming_band_rows(
     nbits: int = 64,
     blocks: int | None = None,
 ) -> DataFrame:
-    """``(doc_id, fp, band, chunk)`` — the pigeonhole band relation of an
-    integer-fingerprint corpus, the PERSISTABLE Hamming index: two
-    fingerprints within distance ``max_hamming`` agree exactly on ≥1 of
-    the index's bands, so candidate lookups are equi-joins on
-    ``(band, chunk)`` and the fingerprint rides along for index-local
-    verification. Deterministic (pure bit arithmetic), so batch and
-    incremental candidate generation split cleanly (the
-    :func:`minhash_band_rows` contract).
+    """``(doc_id, fp, band, chunk, scheme)`` — the pigeonhole band
+    relation of an integer-fingerprint corpus, the PERSISTABLE Hamming
+    index: two fingerprints within distance ``max_hamming`` agree
+    exactly on ≥1 of the index's bands, so candidate lookups are
+    equi-joins on ``(band, chunk)`` and the fingerprint rides along for
+    index-local verification. Deterministic (pure bit arithmetic), so
+    batch and incremental candidate generation split cleanly (the
+    :func:`minhash_band_rows` contract, ``scheme`` stamp included:
+    here it ids ``max_hamming``, ``nbits`` and ``blocks``).
 
     ``blocks`` (default ``max_hamming+1``) generalizes the pigeonhole:
     the fingerprint splits into ``g = blocks`` equal blocks and each
@@ -1746,9 +1848,28 @@ def hamming_band_rows(
     for why and when to widen). ``blocks == max_hamming+1`` reproduces
     the classic one-block-per-band layout byte-for-byte, which is what
     persisted indexes use."""
+    g = blocks if blocks is not None else max_hamming + 1
+    rows = _hamming_bands(
+        fp.select(F.col(id_col).alias("doc_id"), F.col(fp_col).alias("fp")),
+        "fp",
+        max_hamming,
+        nbits,
+        g,
+    )
+    return _with_scheme(
+        rows, "hamming_band_rows", "hamming", max_hamming, nbits, g
+    )
+
+
+def _hamming_bands(
+    rows: DataFrame, fp_col: str, max_hamming: int, nbits: int, g: int
+) -> DataFrame:
+    """``rows`` × their ``(band, chunk)`` keys over ``g`` blocks of the
+    ``fp_col`` fingerprint — the banding engine behind
+    :func:`hamming_band_rows`, ``multimodal.video_frame_band_rows`` and
+    the batch Hamming paths (which carry no ``scheme``)."""
     from itertools import combinations
 
-    g = blocks if blocks is not None else max_hamming + 1
     if g <= max_hamming:
         raise ValueError("blocks must exceed max_hamming (pigeonhole)")
     if nbits // g < 1:
@@ -1772,9 +1893,8 @@ def hamming_band_rows(
         return packed
 
     combos = list(combinations(range(g), g - max_hamming))
-    return fp.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(fp_col).alias("fp"),
+    return rows.select(
+        "*",
         F.explode(
             F.array(
                 *[
@@ -1786,7 +1906,7 @@ def hamming_band_rows(
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "fp", "bb.band", "bb.chunk")
+    ).select(*rows.columns, "bb.band", "bb.chunk")
 
 
 def hamming_pairs(
@@ -1923,14 +2043,13 @@ def _hamming_rep_pairs(
     (id-deduped; one row per fingerprint pair when fingerprints are
     distinct per id) from a pinned ``(_id, _hfp)`` relation — the banded
     self-join core of :func:`hamming_pairs`, shared by its direct and
-    collapse paths."""
-    banded = hamming_band_rows(
-        members, "_id", "_hfp", max_hamming, nbits, blocks=blocks
-    ).select(
-        F.col("doc_id").alias("_hid"),
-        F.col("fp").alias("_hfp"),
-        "band",
-        "chunk",
+    collapse paths and by ``multimodal.video_dup_pairs``."""
+    banded = _hamming_bands(
+        members.select(F.col("_id").alias("_hid"), "_hfp"),
+        "_hfp",
+        max_hamming,
+        nbits,
+        blocks,
     )
     if max_bucket_size is not None:
         # the oversized set is tiny BY DEFINITION (each member holds >
@@ -1998,48 +2117,36 @@ def incremental_hamming_pairs(
 
     exactly, because the pigeonhole banding is deterministic AND exact —
     a pair within distance d shares ≥1 band whichever batches its sides
-    arrived in. Verification is index-local (the index carries the
-    fingerprint), so no document/byte store is touched at all.
-    ``old_index`` rows whose ids reappear in ``new_fp`` are ignored
-    (re-ingestion safe: the new fingerprint wins). Per-refresh cost is
-    O(batch + matched buckets), never O(corpus).
+    arrived in (in-batch pairs included: no dispatcher probe is needed).
+    Verification is index-local (the index carries the fingerprint), so
+    no document/byte store is touched at all. ``old_index`` rows whose
+    ids reappear in ``new_fp`` are ignored (re-ingestion safe: the new
+    fingerprint wins); an index of another band shape raises.
+    Per-refresh cost is O(batch + matched buckets), never O(corpus).
     """
     new_bands = hamming_band_rows(
         new_fp, id_col, fp_col, max_hamming, nbits
-    ).localCheckpoint(eager=True)  # both candidate branches + id set
-    # new-new: exact in-batch pairs
-    new_new = hamming_pairs(new_fp, id_col, fp_col, max_hamming, nbits)
-    if old_index is None:
-        return new_new
-    new_ids = new_bands.select("doc_id").distinct()
-    old = old_index.join(new_ids, on="doc_id", how="left_anti")
-    o = old.select(
-        "band",
-        "chunk",
-        F.col("doc_id").alias("_oid"),
-        F.col("fp").alias("_ofp"),
-    )
-    n = new_bands.select(
-        "band",
-        "chunk",
-        F.col("doc_id").alias("_nid"),
-        F.col("fp").alias("_nfp"),
-    )
-    new_old = (
-        n.join(o, on=["band", "chunk"])
-        .filter(F.col("_nid") != F.col("_oid"))
+    ).localCheckpoint(eager=True)
+    return _hamming_pairs_from_bands(new_bands, old_index, max_hamming)
+
+
+def _hamming_pairs_from_bands(
+    new_bands: DataFrame, old_index: DataFrame | None, max_hamming: int
+) -> DataFrame:
+    """:func:`incremental_hamming_pairs` after banding: the shared core
+    over pinned :func:`hamming_band_rows`, verified with ``bit_count``
+    on the carried fingerprints."""
+    return (
+        _incremental_band_pairs(
+            new_bands, old_index, ["band", "chunk"], "doc_id", carry=("fp",)
+        )
         .withColumn(
-            "hamming", F.bit_count(F.col("_nfp").bitwiseXOR(F.col("_ofp")))
+            "hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.least("_nid", "_oid").alias("id_a"),
-            F.greatest("_nid", "_oid").alias("id_b"),
-            "hamming",
-        )
+        .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return new_new.unionByName(new_old).dropDuplicates(["id_a", "id_b"])
 
 
 # ---------------------------------------------------------------------------
@@ -2581,28 +2688,37 @@ def semantic_band_rows(
     n_bands: int = 32,
     seed: int = 0x5EED,
 ) -> DataFrame:
-    """``(id, cluster, band, bucket)``: the persistable semantic-dedup
-    blocking index of a batch under FIXED driver-held centroids — the
-    embedding analogue of :func:`minhash_band_rows`. Frozen model state
-    (centroids fit once, offline or on the first batch) is what makes
-    the index stable across a stream: every batch assigns and bands
-    identically, so bucket collisions mean the same thing forever."""
+    """``(id, cluster, band, bucket, scheme)``: the persistable
+    semantic-dedup blocking index of a batch under FIXED driver-held
+    centroids — the embedding analogue of :func:`minhash_band_rows`.
+    Frozen model state (centroids fit once, offline or on the first
+    batch) is what makes the index stable across a stream: every batch
+    assigns and bands identically, so bucket collisions mean the same
+    thing forever. ``scheme`` ids the centroids, ``n_planes``,
+    ``n_bands`` and ``seed``; a batch under any other model state fails
+    loudly against the index (rebuild it with this function)."""
     staged = _cosine_assign_staged(df, id_col, vec_col, centroids)
-    return (
-        staged.select(
-            F.col("_id").alias(id_col),
-            "cluster",
-            F.posexplode_outer(
-                sign_lsh_band_buckets("_v", n_planes, n_bands, seed)
-            ).alias("band", "bucket"),
-        )
-        .filter(F.col("bucket").isNotNull())
+    rows = staged.select(
+        F.col("_id").alias(id_col),
+        "cluster",
+        F.posexplode_outer(
+            sign_lsh_band_buckets("_v", n_planes, n_bands, seed)
+        ).alias("band", "bucket"),
+    ).filter(F.col("bucket").isNotNull())
+    return _with_scheme(
+        rows,
+        "semantic_band_rows",
+        "semantic",
+        [[float(x) for x in c] for c in centroids],
+        n_planes,
+        n_bands,
+        seed,
     )
 
 
 def incremental_semantic_pairs(
     new_vecs: DataFrame,
-    old_index: DataFrame,
+    old_index: DataFrame | None,
     corpus: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
@@ -2625,32 +2741,40 @@ def incremental_semantic_pairs(
 
     ``corpus`` supplies vectors for exact-cosine verification (new +
     any old vector that became a candidate). ``old_index`` rows for ids
-    also present in ``new_vecs`` are ignored (re-ingestion safe). At
-    100 TB the per-refresh cost is O(batch + matched buckets), not
-    O(corpus). Output: ``(id_a, id_b, cosine)`` with id_a < id_b.
+    also present in ``new_vecs`` are ignored (re-ingestion safe);
+    ``None`` means no earlier batch, and an index under other model
+    state raises. At 100 TB the per-refresh cost is O(batch + matched
+    buckets), not O(corpus). Output: ``(id_a, id_b, cosine)`` with
+    id_a < id_b.
     """
-    from .similarity import _dot, _dvec, _norm
-
     new_bands = semantic_band_rows(
         new_vecs, centroids, id_col, vec_col, n_planes, n_bands, seed
-    ).localCheckpoint(eager=True)  # reused by both candidate branches
-    new_new = candidate_pairs_from_buckets(
-        new_bands, ["cluster", "band", "bucket"], id_col=id_col
+    ).localCheckpoint(eager=True)
+    return _semantic_pairs_from_bands(
+        new_bands, old_index, corpus, id_col, vec_col, threshold
     )
-    new_ids = new_bands.select(id_col).distinct()
-    old = (
-        old_index.join(new_ids, on=id_col, how="left_anti")
-        .select(F.col(id_col).alias("_old_id"), "cluster", "band", "bucket")
-    )
-    new_old = (
-        new_bands.join(old, on=["cluster", "band", "bucket"])
-        .select(
-            F.least(F.col(id_col), F.col("_old_id")).alias("id_a"),
-            F.greatest(F.col(id_col), F.col("_old_id")).alias("id_b"),
+
+
+def _semantic_pairs_from_bands(
+    new_bands: DataFrame,
+    old_index: DataFrame | None,
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.95,
+) -> DataFrame:
+    """:func:`incremental_semantic_pairs` after banding: the shared core
+    over pinned :func:`semantic_band_rows`, verified with exact cosine
+    against ``corpus``."""
+    from .similarity import _dvec, _norm
+
+    cands = (
+        _incremental_band_pairs(
+            new_bands, old_index, ["cluster", "band", "bucket"], id_col
         )
+        .select("id_a", "id_b")
         .distinct()
     )
-    cands = new_new.unionByName(new_old).distinct()
     vv = corpus.select(
         F.col(id_col).alias("_vid"), _dvec(F.col(vec_col)).alias("_v")
     ).withColumn("_n", _norm(F.col("_v")))

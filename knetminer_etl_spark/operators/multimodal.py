@@ -1036,35 +1036,70 @@ def video_frame_hashes(
 def video_frame_band_rows(
     frames: DataFrame, max_hamming: int = 5
 ) -> DataFrame:
-    """``(media_id, frame_ts_ms, ahash, band, chunk)`` — the pigeonhole
-    band relation of a frame-hash corpus
+    """``(media_id, frame_ts_ms, ahash, band, chunk, scheme)`` — the
+    pigeonhole band relation of a frame-hash corpus
     (:func:`video_frame_hashes` output), the PERSISTABLE frame index:
-    frames within Hamming ``max_hamming`` agree exactly on ≥1 of the
-    ``max_hamming+1`` bands, and the hash rides along so verification is
+    :func:`~knetminer_etl_spark.operators.dedup.hamming_band_rows` over
+    the 64-bit ``ahash`` at ``max_hamming+1`` single-block bands, with
+    the frame timestamp carried so verification and the vote are
     index-local. Deterministic bit arithmetic → batch and incremental
-    candidate generation split cleanly (the ``hamming_band_rows``
-    contract at frame granularity)."""
-    nbands = max_hamming + 1
-    width = 64 // nbands
-    full_mask = -1 if width >= 64 else (1 << width) - 1
-    return frames.select(
-        "media_id",
-        "frame_ts_ms",
+    candidate generation split cleanly; ``scheme`` is the Hamming
+    index stamp (a frame index of another ``max_hamming`` raises)."""
+    from .dedup import _hamming_bands, _with_scheme
+
+    g = max_hamming + 1
+    rows = _hamming_bands(
+        frames.select("media_id", "frame_ts_ms", "ahash"),
         "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("ahash"), b * width)
-                        .bitwiseAND(F.lit(full_mask).cast("long"))
-                        .alias("chunk"),
-                    )
-                    for b in range(nbands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("media_id", "frame_ts_ms", "ahash", "bb.band", "bb.chunk")
+        max_hamming,
+        64,
+        g,
+    )
+    return _with_scheme(
+        rows, "video_frame_band_rows", "hamming", max_hamming, 64, g
+    )
+
+
+def _frame_counts(frames: DataFrame) -> DataFrame:
+    """``(media_id, n_frames)``: sampled frames per video."""
+    return frames.groupBy("media_id").agg(F.count("*").alias("n_frames"))
+
+
+def _frame_vote_pairs(
+    votes: DataFrame, counts: DataFrame, min_match_frac: float
+) -> DataFrame:
+    """Video pairs from per-frame votes ``(id_a, id_b, ts_a, ts_b)`` and
+    the ``(media_id, n_frames)`` table — the vote shared by
+    :func:`video_dup_pairs` and :func:`incremental_video_pairs`. One
+    vote per (pair, source frame), counted PER SIDE: a frame matching
+    several target frames (or via several bands) still counts once,
+    and each video's fraction is over ITS OWN matched frames — 15
+    A-frames all matching one B frame give frac_b = 1/n_b, not 15/n_b.
+    Output: ``(id_a, id_b, matched_frames, frac_a, frac_b)``."""
+    matched = votes.groupBy("id_a", "id_b").agg(
+        F.countDistinct("ts_a").alias("matched_frames"),
+        F.countDistinct("ts_b").alias("_matched_b"),
+    )
+    return (
+        matched.join(
+            counts.select(
+                F.col("media_id").alias("id_a"), F.col("n_frames").alias("_na")
+            ),
+            on="id_a",
+        )
+        .join(
+            counts.select(
+                F.col("media_id").alias("id_b"), F.col("n_frames").alias("_nb")
+            ),
+            on="id_b",
+        )
+        .withColumn("frac_a", F.col("matched_frames") / F.col("_na"))
+        .withColumn("frac_b", F.col("_matched_b") / F.col("_nb"))
+        .filter(
+            F.greatest("frac_a", "frac_b") >= F.lit(min_match_frac)
+        )
+        .select("id_a", "id_b", "matched_frames", "frac_a", "frac_b")
+    )
 
 
 def video_dup_pairs(
@@ -1104,50 +1139,21 @@ def video_dup_pairs(
     hash representatives. Output:
     ``(id_a, id_b, matched_frames, frac_a, frac_b)``.
     """
-    from .dedup import CANDIDATE_METRICS
+    from .dedup import _hamming_rep_pairs
+
     frames = video_frame_hashes(
         df, id_col, binary_col, every_ms, frame_pixels_fn
     ).filter(F.col("ahash").isNotNull())
     frames = frames.localCheckpoint(eager=True)  # both join sides + counts
-    n_frames = frames.groupBy("media_id").agg(
-        F.count("*").alias("n_frames")
-    )
-    # one representative row per distinct hash; banding/bucket-joins run
-    # over these only
+    # one representative row per distinct hash (the hash is its own
+    # id); banding and the bucket self-join run over these only
     reps = frames.select("ahash").distinct().select(
-        F.lit(0).alias("media_id"),
-        F.lit(0).alias("frame_ts_ms"),
-        F.col("ahash"),
+        F.col("ahash").alias("_id"), F.col("ahash").alias("_hfp")
     )
-    banded = video_frame_band_rows(reps, max_hamming)
-    if max_bucket_size is not None:
-        # oversized buckets are tiny in number by definition (> cap rows
-        # each), so the anti-join broadcast never grows with the corpus
-        oversized = (
-            banded.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("_k"))
-            .filter(F.col("_k") > max_bucket_size)
-            .select("band", "chunk")
-        )
-        banded = banded.join(
-            F.broadcast(oversized), on=["band", "chunk"], how="left_anti"
-        )
-    ra = banded.select("band", "chunk", F.col("ahash").alias("h_a"))
-    rb = banded.select("band", "chunk", F.col("ahash").alias("h_b"))
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    CANDIDATE_METRICS["video_frames"] = _obs
-    hash_pairs = (
-        ra.join(rb, on=["band", "chunk"])
-        .filter(F.col("h_a") < F.col("h_b"))
-        .observe(_obs, F.count(F.lit(1)).alias("candidates"))
-        .filter(
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))) <= max_hamming
-        )
-        .select("h_a", "h_b")
-        .dropDuplicates(["h_a", "h_b"])
-    )
+    hash_pairs = _hamming_rep_pairs(
+        reps, max_hamming, 64, max_hamming + 1, max_bucket_size,
+        "video_frames",
+    ).select(F.col("id_a").alias("h_a"), F.col("id_b").alias("h_b"))
     # matching hash pairs = verified cross-hash pairs (both
     # orientations: a frame's hash may sit on either side) plus the
     # diagonal — identical hashes always match at hamming 0
@@ -1169,41 +1175,12 @@ def video_dup_pairs(
         F.col("media_id").alias("id_b"),
         F.col("frame_ts_ms").alias("ts_b"),
     )
-    matched = (
+    votes = (
         sym.join(fa, on="h_a")
         .join(fb, on="h_b")
         .filter(F.col("id_a") < F.col("id_b"))
-        # one vote per (pair, source frame), counted PER SIDE: a frame
-        # matching several target frames (or via several bands) still
-        # counts once, and each video's fraction is over ITS OWN
-        # matched frames — 15 A-frames all matching one B frame give
-        # frac_b = 1/n_b, not 15/n_b
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.countDistinct("ts_a").alias("matched_frames"),
-            F.countDistinct("ts_b").alias("_matched_b"),
-        )
     )
-    return (
-        matched.join(
-            n_frames.select(
-                F.col("media_id").alias("id_a"), F.col("n_frames").alias("_na")
-            ),
-            on="id_a",
-        )
-        .join(
-            n_frames.select(
-                F.col("media_id").alias("id_b"), F.col("n_frames").alias("_nb")
-            ),
-            on="id_b",
-        )
-        .withColumn("frac_a", F.col("matched_frames") / F.col("_na"))
-        .withColumn("frac_b", F.col("_matched_b") / F.col("_nb"))
-        .filter(
-            F.greatest("frac_a", "frac_b") >= F.lit(min_match_frac)
-        )
-        .select("id_a", "id_b", "matched_frames", "frac_a", "frac_b")
-    )
+    return _frame_vote_pairs(votes, _frame_counts(frames), min_match_frac)
 
 
 def incremental_video_pairs(
@@ -1227,7 +1204,8 @@ def incremental_video_pairs(
 
     exactly. ``old_counts`` is ``(media_id, n_frames)`` for prior
     videos (fractions are over a video's FULL frame count whenever it
-    arrived); re-ingested ids use their new frames and count. Output:
+    arrived); re-ingested ids use their new frames and count. A frame
+    index of another ``max_hamming`` raises. Output:
     ``(id_a, id_b, matched_frames, frac_a, frac_b)``.
     """
     new_frames = new_frames.filter(
@@ -1236,97 +1214,55 @@ def incremental_video_pairs(
     new_bands = video_frame_band_rows(
         new_frames, max_hamming
     ).localCheckpoint(eager=True)
-    new_counts = new_frames.groupBy("media_id").agg(
-        F.count("*").alias("n_frames")
+    return _video_pairs_from_bands(
+        new_bands,
+        old_index,
+        _frame_counts(new_frames),
+        old_counts,
+        max_hamming,
+        min_match_frac,
     )
-    a = new_bands.select(
-        "band",
-        "chunk",
-        F.col("media_id").alias("id_a"),
-        F.col("frame_ts_ms").alias("ts_a"),
-        F.col("ahash").alias("h_a"),
-    )
-    b = new_bands.select(
-        "band",
-        "chunk",
-        F.col("media_id").alias("id_b"),
-        F.col("frame_ts_ms").alias("ts_b"),
-        F.col("ahash").alias("h_b"),
-    )
+
+
+def _video_pairs_from_bands(
+    new_bands: DataFrame,
+    old_index: DataFrame | None,
+    new_counts: DataFrame,
+    old_counts: DataFrame | None,
+    max_hamming: int = 5,
+    min_match_frac: float = 0.5,
+) -> DataFrame:
+    """:func:`incremental_video_pairs` after banding: the shared core
+    over pinned :func:`video_frame_band_rows` (timestamp and hash
+    carried with each id), ``bit_count``-verified frame votes, and the
+    vote over new counts plus the old counts of every id not in the
+    batch."""
+    from .dedup import _incremental_band_pairs
+
     votes = (
-        a.join(b, on=["band", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))) <= max_hamming
+        _incremental_band_pairs(
+            new_bands,
+            old_index,
+            ["band", "chunk"],
+            "media_id",
+            carry=("frame_ts_ms", "ahash"),
         )
-        .select("id_a", "id_b", "ts_a", "ts_b")
+        .filter(
+            F.bit_count(F.col("ahash_a").bitwiseXOR(F.col("ahash_b")))
+            <= max_hamming
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.col("frame_ts_ms_a").alias("ts_a"),
+            F.col("frame_ts_ms_b").alias("ts_b"),
+        )
     )
     counts = new_counts
-    if old_index is not None:
-        new_ids = new_frames.select("media_id").distinct()
-        old = old_index.join(new_ids, on="media_id", how="left_anti")
-        o = old.select(
-            "band",
-            "chunk",
-            F.col("media_id").alias("_oid"),
-            F.col("frame_ts_ms").alias("_ots"),
-            F.col("ahash").alias("_oh"),
-        )
-        n = new_bands.select(
-            "band",
-            "chunk",
-            F.col("media_id").alias("_nid"),
-            F.col("frame_ts_ms").alias("_nts"),
-            F.col("ahash").alias("_nh"),
-        )
-        lesser_new = F.col("_nid") < F.col("_oid")
-        cross = (
-            n.join(o, on=["band", "chunk"])
-            .filter(
-                F.bit_count(F.col("_nh").bitwiseXOR(F.col("_oh")))
-                <= max_hamming
-            )
-            .select(
-                F.least("_nid", "_oid").alias("id_a"),
-                F.greatest("_nid", "_oid").alias("id_b"),
-                # ts_a belongs to the LESSER id's frame, whichever side
-                # it arrived on — the per-side vote contract
-                F.when(lesser_new, F.col("_nts"))
-                .otherwise(F.col("_ots"))
-                .alias("ts_a"),
-                F.when(lesser_new, F.col("_ots"))
-                .otherwise(F.col("_nts"))
-                .alias("ts_b"),
+    if old_counts is not None:
+        counts = counts.unionByName(
+            old_counts.select("media_id", "n_frames").join(
+                new_counts.select("media_id"), on="media_id", how="left_anti"
             )
         )
-        votes = votes.unionByName(cross)
-        if old_counts is not None:
-            counts = counts.unionByName(
-                old_counts.select("media_id", "n_frames").join(
-                    new_ids, on="media_id", how="left_anti"
-                )
-            )
-    matched = votes.groupBy("id_a", "id_b").agg(
-        F.countDistinct("ts_a").alias("matched_frames"),
-        F.countDistinct("ts_b").alias("_matched_b"),
-    )
-    return (
-        matched.join(
-            counts.select(
-                F.col("media_id").alias("id_a"), F.col("n_frames").alias("_na")
-            ),
-            on="id_a",
-        )
-        .join(
-            counts.select(
-                F.col("media_id").alias("id_b"), F.col("n_frames").alias("_nb")
-            ),
-            on="id_b",
-        )
-        .withColumn("frac_a", F.col("matched_frames") / F.col("_na"))
-        .withColumn("frac_b", F.col("_matched_b") / F.col("_nb"))
-        .filter(
-            F.greatest("frac_a", "frac_b") >= F.lit(min_match_frac)
-        )
-        .select("id_a", "id_b", "matched_frames", "frac_a", "frac_b")
-    )
+    return _frame_vote_pairs(votes, counts, min_match_frac)

@@ -614,16 +614,6 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     return shingles_from_tokens(tokens(normalize_text(col)), k)
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text."""
-    s = normalize_text(col)
-    n = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-    return F.when(n < k, F.array(s)).otherwise(
-        F.array_distinct(F.transform(idx, lambda i: F.substring(s, i, F.lit(k))))
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     id_col: str = "doc_id",

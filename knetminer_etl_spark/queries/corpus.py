@@ -1114,6 +1114,8 @@ def doc_pipeline_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged = t_grams.filter(
             spec_contains(F.col("gram"), spec)
         ).join(eval_pin, "gram")
+    # n_train − count_distinct(flagged doc_id) equals the anti-join count
+    # only if train doc_id is unique; the upstream dedup stages guarantee it
     tf = train.agg(F.count("*").alias("_nt")).crossJoin(
         flagged.agg(F.count_distinct("doc_id").alias("_nf"))
     )

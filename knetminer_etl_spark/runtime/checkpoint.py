@@ -119,20 +119,6 @@ def estimated_plan_bytes(df: DataFrame) -> int | None:
     return est
 
 
-def sampled_bytes(df: DataFrame, sample_ratio: float = 0.1) -> int:
-    """Sampling size estimate: serialize a partition sample, extrapolate.
-    Runs an extra job — use only when the plan estimate is unusable."""
-    import sys
-
-    rdd = df.rdd
-    n = max(rdd.getNumPartitions(), 1)
-    sampled = rdd.sample(False, sample_ratio, seed=42)
-    size = sampled.mapPartitions(
-        lambda it: [sum(sys.getsizeof(r) for r in it)]
-    ).sum()
-    return int(size / max(sample_ratio, 1e-9))
-
-
 def tuned_partitions(
     df: DataFrame, target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES
 ) -> int | None:

@@ -9,14 +9,21 @@ with dynamic partition overwrites, so the streaming checkpoint +
 idempotent rewrites give exactly-once (the rollup recipe,
 streaming/rollup.py):
 
-* ``index_path`` — (doc_id, band, bucket): the LSH index, appended one
+* ``index_path`` — (doc_id, band, bucket, scheme): the LSH index
+  (:func:`..operators.dedup.minhash_band_rows`), appended one
   batch-partition per epoch; bounded rows per doc (bands), the ONLY
-  thing old batches contribute to new-batch work;
+  thing old batches contribute to new-batch work. ``scheme`` stamps
+  the banding parameters: an epoch banded any other way — or an index
+  written before the stamp existed — fails loudly, before any of the
+  epoch's partitions are written, instead of silently losing recall;
 * ``docs_path``  — (doc_id, text): the document store verification
   draws candidate texts from (semi-joined down to candidates first);
 * ``pairs_path`` — (id_a, id_b, jaccard) per batch: the incremental
   output; the union of all batch partitions equals a full-corpus dedup
   (operator-level equality pinned in tests/test_dedup.py).
+
+Every banded stream here and in streaming/media.py runs the same epoch
+(:func:`_band_epoch`) and the same wiring (:func:`_start_epoch_stream`).
 
 Replay safety: a replayed epoch recomputes against the same prior
 index (its own stale index/doc rows are excluded — the index join
@@ -26,13 +33,18 @@ its own partitions with identical content.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..runtime.session import release_pin
 from pyspark.sql import types as T
 
-from ..operators.dedup import incremental_minhash_pairs, minhash_band_rows
+from ..operators.dedup import (
+    _minhash_pairs_from_bands,
+    _semantic_pairs_from_bands,
+    minhash_band_rows,
+    semantic_band_rows,
+)
+from ..runtime.session import release_pin
 
 DOCS_RAW_SCHEMA = T.StructType(
     [
@@ -107,6 +119,92 @@ def _write_batch_partition(df: DataFrame, epoch_id: int, path: str) -> None:
     )
 
 
+def _with_prior(
+    batch: DataFrame, store: DataFrame | None, key: str
+) -> DataFrame:
+    """The verification corpus: this batch plus the stored rows of every
+    other id (the batch wins on re-ingestion and replay, so duplicate
+    ids can't inflate pair rows)."""
+    if store is None:
+        return batch
+    return batch.unionByName(
+        store.select(*batch.columns).join(
+            batch.select(key), on=key, how="left_anti"
+        )
+    )
+
+
+def _band_epoch(
+    spark: SparkSession,
+    batch: DataFrame,
+    epoch_id: int,
+    id_col: str,
+    index_path: str,
+    pairs_path: str,
+    band,
+    pairs,
+    stores=(),
+) -> None:
+    """One epoch of a banded-index stream — text, semantic, image, video
+    and audio dedup all run this:
+
+    1. pin ``batch`` (decode and fingerprinting run once); an empty
+       epoch writes nothing — file streams can fire one before the
+       first file lands, and an empty partition leaves a schema-less
+       parquet dir that poisons every later read;
+    2. probe and read the latest index and store rows (keyed by
+       ``id_col``);
+    3. band the batch once, ``band(batch)``, and pin the band rows;
+    4. ``pairs(batch, bands, index, *stores)``: the engine's shared
+       incremental core and its verifier;
+    5. write the pairs partition;
+    6. write the same pinned band rows as the index partition;
+    7. write each store partition (``stores``: ``(path, rows_fn)``);
+    8. release both pins.
+
+    Each write overwrites this epoch's own ``batch_id`` partition, so a
+    replayed epoch rewrites identical content. A foreign-scheme index
+    fails step 5's job, before any partition of the epoch is written."""
+    seen = Observation()  # the emptiness probe rides the pin's own job
+    batch = batch.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    bands = None
+    try:
+        if not seen.get["n"]:
+            return
+        index = _read_or_none(spark, index_path, id_col)
+        state = [_read_or_none(spark, p, id_col) for p, _ in stores]
+        bands = band(batch).localCheckpoint(eager=True)
+        _write_batch_partition(
+            pairs(batch, bands, index, *state), epoch_id, pairs_path
+        )
+        _write_batch_partition(bands, epoch_id, index_path)
+        for path, rows in stores:
+            _write_batch_partition(rows(batch), epoch_id, path)
+    finally:
+        # a long-lived stream would otherwise accumulate pinned blocks
+        # per epoch until executor storage pressure degrades later
+        # batches
+        if bands is not None:
+            release_pin(bands)
+        release_pin(batch)
+
+
+def _start_epoch_stream(
+    stream: DataFrame, on_batch, checkpoint_path: str, query_name: str
+):
+    """Run ``on_batch(batch, epoch_id)`` on every micro-batch of
+    ``stream`` under a streaming checkpoint; returns the
+    StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .queryName(query_name)
+        .start()
+    )
+
+
 def process_dedup_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -123,43 +221,22 @@ def process_dedup_batch(
     index and doc store (its own partition each — idempotent replay).
     Exposed separately from the stream wiring so tests can drive and
     replay epochs deterministically (rollup's `_merge_batch` pattern)."""
-    batch = batch.select("doc_id", "text").localCheckpoint(eager=True)
-    batch_ids = batch.select("doc_id")
-    index = _read_or_none(spark, index_path, latest_key="doc_id")
-    store = _read_or_none(spark, docs_path, latest_key="doc_id")
-    # corpus for verification: this batch + prior docs (batch wins on
-    # re-ingestion/replay so duplicate ids can't inflate pair rows)
-    corpus = batch
-    if store is not None:
-        corpus = batch.unionByName(
-            store.select("doc_id", "text").join(
-                batch_ids, on="doc_id", how="left_anti"
-            )
-        )
-    if index is None:
-        index = minhash_band_rows(
-            batch.limit(0), "doc_id", "text", num_perm, bands, k
-        )
-    pairs = incremental_minhash_pairs(
-        batch,
-        index.select("doc_id", "band", "bucket"),
-        corpus,
-        num_perm=num_perm,
-        bands=bands,
-        k=k,
-        threshold=threshold,
-    )
-    _write_batch_partition(pairs, epoch_id, pairs_path)
-    _write_batch_partition(
-        minhash_band_rows(batch, "doc_id", "text", num_perm, bands, k),
+    _band_epoch(
+        spark,
+        batch.select("doc_id", "text"),
         epoch_id,
+        "doc_id",
         index_path,
+        pairs_path,
+        band=lambda docs: minhash_band_rows(
+            docs, "doc_id", "text", num_perm, bands, k
+        ),
+        pairs=lambda docs, rows, index, store: _minhash_pairs_from_bands(
+            rows, index, _with_prior(docs, store, "doc_id"), k=k,
+            threshold=threshold,
+        ),
+        stores=[(docs_path, lambda docs: docs)],
     )
-    _write_batch_partition(batch, epoch_id, docs_path)
-    # batch scope is over once its partitions are written: release the
-    # per-epoch pin or a long-lived stream accumulates pinned blocks
-    # until executor storage pressure degrades later batches
-    release_pin(batch)
 
 
 def start_dedup_stream(
@@ -176,26 +253,14 @@ def start_dedup_stream(
 ):
     """Start continuous dedup; returns the StreamingQuery."""
     spark = doc_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_dedup_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            docs_path,
-            pairs_path,
-            num_perm,
-            bands,
-            k,
-            threshold,
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+    return _start_epoch_stream(
+        doc_stream,
+        lambda batch, epoch_id: process_dedup_batch(
+            spark, batch, epoch_id, index_path, docs_path, pairs_path,
+            num_perm, bands, k, threshold,
+        ),
+        checkpoint_path,
+        query_name,
     )
 
 
@@ -248,50 +313,24 @@ def process_semantic_batch(
     FROZEN model state shared by every epoch (fit offline or on the
     first batch): that is what keeps the persisted index meaningful —
     every batch assigns and bands identically, so a bucket collision
-    means the same thing at epoch 1 and epoch 10⁶."""
-    from ..operators.dedup import (
-        incremental_semantic_pairs,
-        semantic_band_rows,
-    )
-
-    batch = batch.select("vec_id", "embedding").localCheckpoint(eager=True)
-    batch_ids = batch.select("vec_id")
-    index = _read_or_none(spark, index_path, latest_key="vec_id")
-    store = _read_or_none(spark, vecs_path, latest_key="vec_id")
-    # corpus for verification: this batch + prior vectors (batch wins on
-    # re-ingestion/replay so duplicate ids can't inflate pair rows)
-    corpus = batch
-    if store is not None:
-        corpus = batch.unionByName(
-            store.select("vec_id", "embedding").join(
-                batch_ids, on="vec_id", how="left_anti"
-            )
-        )
-    if index is None:
-        index = semantic_band_rows(
-            batch.limit(0), centroids, n_planes=n_planes,
-            n_bands=n_bands, seed=seed,
-        )
-    pairs = incremental_semantic_pairs(
-        batch,
-        index.select("vec_id", "cluster", "band", "bucket"),
-        corpus,
-        centroids,
-        threshold=threshold,
-        n_planes=n_planes,
-        n_bands=n_bands,
-        seed=seed,
-    )
-    _write_batch_partition(pairs, epoch_id, pairs_path)
-    _write_batch_partition(
-        semantic_band_rows(
-            batch, centroids, n_planes=n_planes, n_bands=n_bands, seed=seed
-        ),
+    means the same thing at epoch 1 and epoch 10⁶ (the index's
+    ``scheme`` refuses a batch under other centroids or band shape)."""
+    _band_epoch(
+        spark,
+        batch.select("vec_id", "embedding"),
         epoch_id,
+        "vec_id",
         index_path,
+        pairs_path,
+        band=lambda vecs: semantic_band_rows(
+            vecs, centroids, n_planes=n_planes, n_bands=n_bands, seed=seed
+        ),
+        pairs=lambda vecs, rows, index, store: _semantic_pairs_from_bands(
+            rows, index, _with_prior(vecs, store, "vec_id"),
+            threshold=threshold,
+        ),
+        stores=[(vecs_path, lambda vecs: vecs)],
     )
-    _write_batch_partition(batch, epoch_id, vecs_path)
-    release_pin(batch)  # per-epoch pin — see process_dedup_batch
 
 
 def start_semantic_dedup_stream(
@@ -309,27 +348,14 @@ def start_semantic_dedup_stream(
 ):
     """Start continuous semantic dedup; returns the StreamingQuery."""
     spark = vec_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_semantic_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            vecs_path,
-            pairs_path,
-            centroids,
-            threshold,
-            n_planes,
-            n_bands,
-            seed,
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+    return _start_epoch_stream(
+        vec_stream,
+        lambda batch, epoch_id: process_semantic_batch(
+            spark, batch, epoch_id, index_path, vecs_path, pairs_path,
+            centroids, threshold, n_planes, n_bands, seed,
+        ),
+        checkpoint_path,
+        query_name,
     )
 
 
@@ -380,7 +406,7 @@ def process_decon_batch(
         seed=seed,
     )
     _write_batch_partition(kept, epoch_id, clean_path)
-    release_pin(batch)  # per-epoch pin — see process_dedup_batch
+    release_pin(batch)  # per-epoch pin — see _band_epoch
 
 
 def start_semantic_decon_stream(
@@ -415,23 +441,14 @@ def start_semantic_decon_stream(
     elif n_bands is None:
         n_bands = 48
 
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_decon_batch(
-            batch,
-            epoch_id,
-            test_pinned,
-            clean_path,
-            threshold,
-            n_planes,
-            n_bands,
-            seed,
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+    return _start_epoch_stream(
+        vec_stream,
+        lambda batch, epoch_id: process_decon_batch(
+            batch, epoch_id, test_pinned, clean_path, threshold, n_planes,
+            n_bands, seed,
+        ),
+        checkpoint_path,
+        query_name,
     )
 
 
@@ -459,7 +476,7 @@ def process_lexical_decon_batch(
         batch, eval_grams, spec, "doc_id", "text", n, max_hits
     )
     _write_batch_partition(kept, epoch_id, clean_path)
-    release_pin(batch)  # per-epoch pin — see process_dedup_batch
+    release_pin(batch)  # per-epoch pin — see _band_epoch
 
 
 def start_lexical_decon_stream(
@@ -494,16 +511,13 @@ def start_lexical_decon_stream(
         n_bits = sized_bloom_bits(eval_grams.count())
     spec = build_spec(eval_grams, "gram", n_bits, k, seed="decon", hash="xx")
 
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_lexical_decon_batch(
+    return _start_epoch_stream(
+        doc_stream,
+        lambda batch, epoch_id: process_lexical_decon_batch(
             batch, epoch_id, eval_grams, spec, clean_path, n, max_hits
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+        ),
+        checkpoint_path,
+        query_name,
     )
 
 

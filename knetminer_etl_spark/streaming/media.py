@@ -13,14 +13,20 @@ State is two parquet tables, both partitioned by ``batch_id`` and
 maintained with dynamic partition overwrites (the rollup recipe →
 streaming checkpoint + idempotent rewrites = exactly-once):
 
-* ``index_path`` — (doc_id, fp, band, chunk): the pigeonhole band
-  index (:func:`..operators.dedup.hamming_band_rows`), one partition
-  appended per epoch; max_hamming+1 rows per media item;
+* ``index_path`` — (doc_id, fp, band, chunk, scheme): the pigeonhole
+  band index (:func:`..operators.dedup.hamming_band_rows`), one
+  partition appended per epoch; max_hamming+1 rows per media item.
+  ``scheme`` stamps the band shape: an epoch at another
+  ``max_hamming`` — or an index written before the stamp existed —
+  fails loudly before any of the epoch's partitions are written;
 * ``pairs_path`` — (id_a, id_b, hamming) per batch: the incremental
   output; the union of all batch partitions equals a full-corpus
   :func:`..operators.dedup.hamming_pairs` run (operator-level equality
   pinned in tests — the banding is exact AND deterministic, so
   candidate generation splits cleanly into new-new + new-old).
+
+Every epoch is the shared banded-index epoch of streaming/dedupe.py
+(:func:`.dedupe._band_epoch`), and every stream its wiring.
 
 Replay safety: a replayed epoch recomputes against the same prior index
 (its own stale index rows are excluded — new fingerprints win) and
@@ -42,12 +48,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (
-    hamming_band_rows,
-    incremental_hamming_pairs,
-)
+from ..operators.dedup import _hamming_pairs_from_bands, hamming_band_rows
 from ..operators.multimodal import image_ahash
-from .dedupe import _read_or_none, _write_batch_partition
+from .dedupe import _band_epoch, _start_epoch_stream
 
 
 def process_image_batch(
@@ -64,33 +67,24 @@ def process_image_batch(
     """One epoch: decode + aHash this batch, emit the pairs its arrival
     creates (vs itself and vs the persisted index), extend the index.
     Exposed separately from the stream wiring so tests can drive and
-    replay epochs deterministically."""
-    # pin the fingerprints: referenced by in-batch pairing, the index
-    # join, the id set, and the index write — the Arrow decode pass
-    # must run once per byte, not once per reference
-    fp = (
-        image_ahash(batch, id_col, binary_col, pixels_fn=pixels_fn)
-        .filter(F.col("ahash").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    if not fp.take(1):
-        # empty epoch (file streams can fire one before the first file
-        # lands): writing it would leave a schema-less parquet dir that
-        # poisons every later index read
-        return
-    index = _read_or_none(spark, index_path, latest_key="doc_id")
-    pairs = incremental_hamming_pairs(
-        fp,
-        index.select("doc_id", "fp", "band", "chunk") if index is not None else None,
-        id_col="media_id",
-        fp_col="ahash",
-        max_hamming=max_hamming,
-    )
-    _write_batch_partition(pairs, epoch_id, pairs_path)
-    _write_batch_partition(
-        hamming_band_rows(fp, "media_id", "ahash", max_hamming),
+    replay epochs deterministically. The pinned batch is the
+    fingerprints: in-batch pairing, the index join, the id set and the
+    index write all read it, so the Arrow decode runs once per byte."""
+    _band_epoch(
+        spark,
+        image_ahash(batch, id_col, binary_col, pixels_fn=pixels_fn).filter(
+            F.col("ahash").isNotNull()
+        ),
         epoch_id,
+        "doc_id",
         index_path,
+        pairs_path,
+        band=lambda fp: hamming_band_rows(
+            fp, "media_id", "ahash", max_hamming
+        ),
+        pairs=lambda fp, rows, index: _hamming_pairs_from_bands(
+            rows, index, max_hamming
+        ),
     )
 
 
@@ -107,25 +101,14 @@ def start_image_dedup_stream(
 ):
     """Start continuous image near-dup; returns the StreamingQuery."""
     spark = media_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_image_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            pairs_path,
-            id_col,
-            binary_col,
-            pixels_fn,
-            max_hamming,
-        )
-
-    return (
-        media_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+    return _start_epoch_stream(
+        media_stream,
+        lambda batch, epoch_id: process_image_batch(
+            spark, batch, epoch_id, index_path, pairs_path, id_col,
+            binary_col, pixels_fn, max_hamming,
+        ),
+        checkpoint_path,
+        query_name,
     )
 
 
@@ -161,37 +144,27 @@ def process_video_batch(
     table. Verification is index-local (hash + timestamp ride the
     index); the video bytes never enter any state table."""
     from ..operators.multimodal import (
-        incremental_video_pairs,
+        _frame_counts,
+        _video_pairs_from_bands,
         video_frame_band_rows,
         video_frame_hashes,
     )
 
-    frames = (
-        video_frame_hashes(batch, id_col, binary_col, every_ms, frame_pixels_fn)
-        .filter(F.col("ahash").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    if not frames.take(1):
-        return  # empty epoch: see process_image_batch
-    index = _read_or_none(spark, index_path, latest_key="media_id")
-    counts = _read_or_none(spark, counts_path, latest_key="media_id")
-    pairs = incremental_video_pairs(
-        frames,
-        index.select("media_id", "frame_ts_ms", "ahash", "band", "chunk")
-        if index is not None
-        else None,
-        counts.select("media_id", "n_frames") if counts is not None else None,
-        max_hamming=max_hamming,
-        min_match_frac=min_match_frac,
-    )
-    _write_batch_partition(pairs, epoch_id, pairs_path)
-    _write_batch_partition(
-        video_frame_band_rows(frames, max_hamming), epoch_id, index_path
-    )
-    _write_batch_partition(
-        frames.groupBy("media_id").agg(F.count("*").alias("n_frames")),
+    _band_epoch(
+        spark,
+        video_frame_hashes(
+            batch, id_col, binary_col, every_ms, frame_pixels_fn
+        ).filter(F.col("ahash").isNotNull()),
         epoch_id,
-        counts_path,
+        "media_id",
+        index_path,
+        pairs_path,
+        band=lambda frames: video_frame_band_rows(frames, max_hamming),
+        pairs=lambda frames, rows, index, counts: _video_pairs_from_bands(
+            rows, index, _frame_counts(frames), counts, max_hamming,
+            min_match_frac,
+        ),
+        stores=[(counts_path, _frame_counts)],
     )
 
 
@@ -211,28 +184,15 @@ def start_video_dedup_stream(
 ):
     """Start continuous video near-dup; returns the StreamingQuery."""
     spark = media_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_video_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            counts_path,
-            pairs_path,
-            id_col,
-            binary_col,
-            every_ms,
-            frame_pixels_fn,
-            max_hamming,
+    return _start_epoch_stream(
+        media_stream,
+        lambda batch, epoch_id: process_video_batch(
+            spark, batch, epoch_id, index_path, counts_path, pairs_path,
+            id_col, binary_col, every_ms, frame_pixels_fn, max_hamming,
             min_match_frac,
-        )
-
-    return (
-        media_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+        ),
+        checkpoint_path,
+        query_name,
     )
 
 
@@ -273,8 +233,6 @@ def process_audio_batch(
             F.col("fingerprint").alias("embedding"),
         )
     )
-    if not fp.take(1):
-        return  # empty epoch: see process_image_batch
     process_semantic_batch(
         spark,
         fp,
@@ -303,26 +261,12 @@ def start_audio_dedup_stream(
 ):
     """Start continuous audio near-dup; returns the StreamingQuery."""
     spark = media_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_audio_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            vecs_path,
-            pairs_path,
-            centroids,
-            id_col,
-            binary_col,
-            samples_fn,
-            n_frames,
-            threshold,
-        )
-
-    return (
-        media_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
+    return _start_epoch_stream(
+        media_stream,
+        lambda batch, epoch_id: process_audio_batch(
+            spark, batch, epoch_id, index_path, vecs_path, pairs_path,
+            centroids, id_col, binary_col, samples_fn, n_frames, threshold,
+        ),
+        checkpoint_path,
+        query_name,
     )

@@ -739,16 +739,9 @@ class TestSemanticDedup:
         index = None
         pairs = []
         for b in batches:
-            old = (
-                index
-                if index is not None
-                else spark.createDataFrame(
-                    [], "vec_id long, cluster int, band int, bucket long"
-                )
-            )
             pairs.extend(
                 incremental_semantic_pairs(
-                    b, old, corpus, cents, threshold=0.95
+                    b, index, corpus, cents, threshold=0.95
                 ).collect()
             )
             bands = semantic_band_rows(b, cents)

@@ -145,3 +145,24 @@ def test_cross_epoch_reingestion_latest_wins(spark, tmp_path):
     assert (1, 9) not in pairs  # stale-version pair suppressed
     assert pairs.count((1, 10)) == 1  # latest-version pair found once
     assert pairs.count((2, 11)) == 1  # identical re-ingest: no dup rows
+
+
+def test_empty_epoch_writes_nothing(spark, tmp_path):
+    """An empty micro-batch (file streams can fire one before the first
+    file lands) leaves no partition behind — an empty first partition
+    would leave schema-less state dirs that later epochs cannot read."""
+    args = dict(
+        index_path=str(tmp_path / "idx"),
+        docs_path=str(tmp_path / "store"),
+        pairs_path=str(tmp_path / "pairs"),
+        threshold=0.5,
+    )
+    schema = "doc_id long, text string"
+    SD.process_dedup_batch(spark, spark.createDataFrame([], schema), 0, **args)
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    SD.process_dedup_batch(
+        spark, spark.createDataFrame([(1, text), (2, text)], schema), 1,
+        **args,
+    )
+    pairs = SD.read_pairs(spark, args["pairs_path"]).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]

@@ -331,3 +331,121 @@ class TestContinuousImageDedup:
             ).collect()
         }
         assert got == want
+
+    @staticmethod
+    def _media_stream(spark, src, rows):
+        """A file-source media stream, one parquet file per row."""
+        from pyspark.sql import types as T
+
+        for i, row in enumerate(rows):
+            spark.createDataFrame(
+                [row], "media_id long, data binary"
+            ).write.mode("overwrite").parquet(f"{src}/f{i}.parquet")
+        schema = T.StructType(
+            [
+                T.StructField("media_id", T.LongType()),
+                T.StructField("data", T.BinaryType()),
+            ]
+        )
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/*")
+        )
+
+    @staticmethod
+    def _drain(q):
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def test_video_stream_equals_one_epoch(self, spark, tmp_path):
+        """start_video_dedup_stream over a file source (one video per
+        micro-batch) emits the pairs of one process_video_batch epoch
+        over the same rows."""
+        from knetminer_etl_spark.streaming import media as SM
+
+        mp4 = __import__(
+            "tests.test_multimodal", fromlist=["TestMp4Decode"]
+        ).TestMp4Decode._mp4_bytes
+        shared = lambda data, ts: MM._fake_pixels(
+            int(ts).to_bytes(8, "little"), "bin"
+        )
+        rows = [(1, mp4(duration=9500)), (2, mp4(duration=4500)),
+                (3, mp4(duration=2500))]
+        kw = dict(frame_pixels_fn=shared, max_hamming=0, min_match_frac=0.5)
+        stream = [str(tmp_path / p) for p in ("sidx", "scnt", "spairs")]
+        self._drain(
+            SM.start_video_dedup_stream(
+                self._media_stream(spark, str(tmp_path / "src"), rows),
+                *stream,
+                str(tmp_path / "ckpt"),
+                **kw,
+            )
+        )
+        once = [str(tmp_path / p) for p in ("idx", "cnt", "pairs")]
+        SM.process_video_batch(
+            spark,
+            spark.createDataFrame(rows, "media_id long, data binary"),
+            0,
+            *once,
+            **kw,
+        )
+
+        def pairs(path):
+            return {
+                (r["id_a"], r["id_b"]): (
+                    r["matched_frames"], r["frac_a"], r["frac_b"]
+                )
+                for r in spark.read.parquet(path).collect()
+            }
+
+        got = pairs(stream[2])
+        assert got == pairs(once[2])
+        assert (1, 3) in got  # the trim twin, found across micro-batches
+
+    def test_audio_stream_equals_one_epoch(self, spark, tmp_path):
+        """start_audio_dedup_stream over a file source (one clip per
+        micro-batch) emits the pairs of one process_audio_batch epoch
+        over the same rows."""
+        from knetminer_etl_spark.queries.media import _audio_wave
+        from knetminer_etl_spark.streaming import dedupe as SD
+        from knetminer_etl_spark.streaming import media as SM
+
+        base_ids = [0, 20, 60]
+        rows = [(i, MM.wav_encode(_audio_wave(i))) for i in base_ids] + [
+            (i + 10_000_000, MM.wav_encode(_audio_wave(i + 10_000_000)))
+            for i in base_ids[:2]
+        ]
+        centroids = [
+            MM._audio_fp_one(_audio_wave(0)),
+            MM._audio_fp_one(_audio_wave(60)),
+        ]
+        stream = [str(tmp_path / p) for p in ("sidx", "svecs", "spairs")]
+        self._drain(
+            SM.start_audio_dedup_stream(
+                self._media_stream(spark, str(tmp_path / "src"), rows),
+                *stream,
+                str(tmp_path / "ckpt"),
+                centroids,
+            )
+        )
+        once = [str(tmp_path / p) for p in ("idx", "vecs", "pairs")]
+        SM.process_audio_batch(
+            spark,
+            spark.createDataFrame(rows, "media_id long, data binary"),
+            0,
+            *once,
+            centroids,
+        )
+
+        def pairs(path):
+            return {
+                (r["id_a"], r["id_b"]): r["cosine"]
+                for r in SD.read_semantic_pairs(spark, path).collect()
+            }
+
+        got = pairs(stream[2])
+        assert got == pairs(once[2])
+        assert got[(0, 10_000_000)] == 1.0 and got[(20, 10_000_020)] == 1.0

@@ -42,15 +42,18 @@ def main() -> None:
     from knetminer_etl_spark.runtime.session import release_pinned_rdds
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    conf = {
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.ui.enabled": "true",
+        "spark.cleaner.periodicGC.interval": "10min",
+    }
+    # driver heap: get_session's default unless the caller sizes it
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        conf["spark.driver.memory"] = os.environ["SPARK_GRAFT_DRIVER_MEM"]
     spark = get_session(
         app_name="job-profile",
         master=f"local[{cpus}]",
-        conf={
-            "spark.sql.shuffle.partitions": cpus,
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-            "spark.ui.enabled": "true",
-            "spark.cleaner.periodicGC.interval": "10min",
-        },
+        conf=conf,
     )
     spark.sparkContext.setLogLevel("ERROR")
     port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[-1])

@@ -267,7 +267,6 @@ def _session():
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count() or 8)}]",
         conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "48g",
             # 45s periodic GC landed stop-the-world full GCs INSIDE the
             # 30-250s timed windows of the 100x tier (measured: the
             # semantic-dedup 33 vs 148s bimodality); explicit System.gc
